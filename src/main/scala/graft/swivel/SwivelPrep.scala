@@ -1,7 +1,6 @@
 package graft.swivel
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Swivel embedding-prep pipeline, re-expressed relationally
@@ -21,13 +20,19 @@ import org.apache.spark.sql.functions._
   * identical under ANY partitioning/aggregation order (no double-sum
   * nondeterminism), in Spark and in the DuckDB oracle alike.
   *
-  * Scale posture (100 TB corpus): tokenize/pair-generation is embarrassingly
-  * parallel per document; the vocab is the only global structure and is
-  * bounded by truncation (broadcast-joined, never collected); cooc cells
-  * shuffle once on (row_id, col_id); sharding is a pure projection. Hot
-  * (Zipfian) tokens skew the cooc shuffle — AQE skew-join handles it, and
-  * the groupBy key (row_id, col_id) already spreads a hot row across its
-  * column partners.
+  * Scale posture (100 TB corpus): one row is one document, as one line
+  * is in `fastprep` — a document split across rows loses its
+  * cross-row pairs (`Sources.textCorpus` reads one line per row, and a
+  * parquet `documents` table holds one row per doc_id). Vocab counting
+  * and pair generation are row-local; the vocab is the only global
+  * structure, bounded by truncation, collected once and broadcast as a
+  * token → id map. There is no self-join and no AQE skew-join: the first
+  * shuffle is the cell groupBy on (row_id, col_id), whose map-side partial
+  * aggregation collapses a hot (Zipfian) cell to one row per task before
+  * the exchange, and whose key spreads a hot row across its column
+  * partners (`coocSalted` adds a salt for still heavier skew); marginals,
+  * PMI and shards are derivations of that one cell relation and sharding
+  * is a pure projection.
   */
 object SwivelPrep {
 
@@ -65,6 +70,7 @@ object SwivelPrep {
   }
 
   def buildVocab(docs: DataFrame, minCount: Int, shardSize: Int): DataFrame = {
+    require(shardSize >= 1, s"shardSize must be >= 1, got $shardSize")
     val spark = docs.sparkSession
     import spark.implicits._
     // The token-count relation has three consumers (the truncation count,
@@ -96,36 +102,83 @@ object SwivelPrep {
     * orientations (the matrix is symmetric; a self-pair (t,t,d) therefore
     * contributes twice to cell (t,t)).
     * Output: (row_id, col_id, dd).
+    *
+    * A row-local window generator, as `fastprep` slides its window over
+    * one line: each row is split with `tokenize`'s semantics (Java
+    * `split(" ", -1)`: empty tokens kept, "" is one empty token; a null
+    * text emits nothing), tokens map to ids through the broadcast vocab,
+    * and out-of-vocab positions are skipped — distances stay measured on
+    * the original positions, but pairs only form between in-vocab tokens.
+    * No doc_id is read and nothing shuffles before the caller's groupBy;
+    * the row is the document.
     */
   def coocPairs(docs: DataFrame, vocab: DataFrame, windowSize: Int): DataFrame = {
-    // Out-of-vocab tokens drop at this broadcast join, BEFORE pair
-    // generation — order matters for semantics (distances are measured on
-    // original positions, but pairs only form between in-vocab tokens).
-    val t = tokenize(docs)
-      .join(broadcast(vocab.select("token", "id")), "token")
-      .select(col("doc_id"), col("pos"), col("id"))
-    val pairs = t.as("a").join(t.as("b"),
-        col("a.doc_id") === col("b.doc_id") &&
-        col("b.pos") > col("a.pos") &&
-        col("b.pos") <= col("a.pos") + windowSize)
-      .select(col("a.id").as("x"), col("b.id").as("y"),
-        (col("b.pos") - col("a.pos")).cast("int").as("dd"))
-    pairs.select(col("x").as("row_id"), col("y").as("col_id"), col("dd"))
-      .union(pairs.select(col("y").as("row_id"), col("x").as("col_id"), col("dd")))
+    require(windowSize >= 1, s"windowSize must be >= 1, got $windowSize")
+    val spark = docs.sparkSession
+    import spark.implicits._
+    // bounded by truncation — the same structure the reference writes out
+    // as its vocab file and loads whole into every worker
+    val ids = new java.util.HashMap[String, java.lang.Long]()
+    vocab.select(col("token"), col("id")).as[(String, Long)].collect()
+      .foreach { case (t, i) => ids.put(t, i) }
+    val idsB = spark.sparkContext.broadcast(ids)
+    docs.select(col("text")).as[String].flatMap { text =>
+      if (text == null) Iterator.empty
+      else {
+        val m = idsB.value
+        val tok = text.split(" ", -1).map(m.get)
+        for {
+          i <- Iterator.range(0, tok.length) if tok(i) != null
+          j <- Iterator.range(i + 1, math.min(i + windowSize, tok.length - 1) + 1)
+          if tok(j) != null
+          (x, y) <- Iterator((tok(i), tok(j)), (tok(j), tok(i)))
+        } yield (x.longValue, y.longValue, j - i)
+      }
+    }.toDF("row_id", "col_id", "dd")
   }
 
-  /** Fixed-order Σ_d n_d/d over the conditional per-distance counts —
-    * see the determinism note in the object scaladoc. */
+  /** Exact integer per-distance counts n_1..n_W of `pairs`' `dd` per
+    * `keys` group. */
+  private def distanceCounts(pairs: DataFrame, windowSize: Int, keys: Column*): DataFrame = {
+    val n = (1 to windowSize).map(k => sum(when(col("dd") === k, 1L).otherwise(0L)).as(s"n$k"))
+    pairs.groupBy(keys: _*).agg(n.head, n.tail: _*)
+  }
+
+  /** Merge n_1..n_W count columns per `keys` group — exact integer sums,
+    * so every merge order yields the same counts. */
+  private def mergeCounts(counts: DataFrame, windowSize: Int, keys: Column*): DataFrame = {
+    val n = (1 to windowSize).map(k => sum(col(s"n$k")).as(s"n$k"))
+    counts.groupBy(keys: _*).agg(n.head, n.tail: _*)
+  }
+
+  /** The one cell relation every downstream output derives from:
+    * (row_id, col_id, n1..nW), the exact integer count of in-window
+    * co-occurrences of the cell at each distance, in one groupBy over
+    * `coocPairs`. */
+  def cellCounts(docs: DataFrame, vocab: DataFrame, windowSize: Int): DataFrame =
+    distanceCounts(coocPairs(docs, vocab, windowSize), windowSize, col("row_id"), col("col_id"))
+
+  /** Fixed-order Σ_d n_d/d over the per-distance count columns — see the
+    * determinism note in the object scaladoc. */
   private def weightExpr(windowSize: Int): Column =
-    (1 to windowSize).map(k => sum(when(col("dd") === k, 1L).otherwise(0L)) / lit(k.toDouble))
-      .reduceLeft(_ + _)
+    (1 to windowSize).map(k => col(s"n$k") / lit(k.toDouble)).reduceLeft(_ + _)
+
+  /** Cells of a `cellCounts` relation: (row_id, col_id, weight) with
+    * weight = Σ 1/d over all in-window co-occurrences, rounded 4dp. */
+  def cellWeights(counts: DataFrame, windowSize: Int): DataFrame =
+    counts.select(col("row_id"), col("col_id"), round(weightExpr(windowSize), 4).as("weight"))
+
+  /** Row sums of a `cellCounts` relation: (id, marginal). The n_d sum per
+    * row first — exact integers, the `coocSalted` merge — so the one
+    * fixed-order weight chain then runs over the UNROUNDED row totals. */
+  def rowSums(counts: DataFrame, windowSize: Int): DataFrame =
+    mergeCounts(counts, windowSize, col("row_id").as("id"))
+      .select(col("id"), round(weightExpr(windowSize), 4).as("marginal"))
 
   /** Co-occurrence cells: (row_id, col_id, weight) with weight = Σ 1/d
     * over all in-window co-occurrences, rounded 4dp at the boundary. */
   def cooc(docs: DataFrame, vocab: DataFrame, windowSize: Int): DataFrame =
-    coocPairs(docs, vocab, windowSize)
-      .groupBy("row_id", "col_id")
-      .agg(round(weightExpr(windowSize), 4).as("weight"))
+    cellWeights(cellCounts(docs, vocab, windowSize), windowSize)
 
   /** Skew-hardened variant: Zipfian corpora make the hot tokens' cells
     * (e.g. (the,the)) receive a large share of all pairs, so a single
@@ -138,18 +191,10 @@ object SwivelPrep {
     */
   def coocSalted(docs: DataFrame, vocab: DataFrame, windowSize: Int,
       saltBuckets: Int = 64): DataFrame = {
-    val partials = coocPairs(docs, vocab, windowSize)
+    val salted = coocPairs(docs, vocab, windowSize)
       .withColumn("salt", pmod(hash(col("row_id"), col("col_id"), monotonically_increasing_id()), lit(saltBuckets)))
-      .groupBy("row_id", "col_id", "salt")
-      .agg((1 to windowSize).map(k =>
-        sum(when(col("dd") === k, 1L).otherwise(0L)).as(s"n$k")).head,
-        (2 to windowSize).map(k =>
-          sum(when(col("dd") === k, 1L).otherwise(0L)).as(s"n$k")): _*)
-    val merged = partials.groupBy("row_id", "col_id")
-      .agg((1 to windowSize).map(k => sum(col(s"n$k")).as(s"n$k")).head,
-        (2 to windowSize).map(k => sum(col(s"n$k")).as(s"n$k")): _*)
-    val w = (1 to windowSize).map(k => col(s"n$k") / lit(k.toDouble)).reduceLeft(_ + _)
-    merged.select(col("row_id"), col("col_id"), round(w, 4).as("weight"))
+    val partials = distanceCounts(salted, windowSize, col("row_id"), col("col_id"), col("salt"))
+    cellWeights(mergeCounts(partials, windowSize, col("row_id"), col("col_id")), windowSize)
   }
 
   /** Positive-PMI report over the co-occurrence matrix — the quantity
@@ -163,26 +208,23 @@ object SwivelPrep {
     * log() never runs — monotone in the ratio, so ranking by ratio IS
     * ranking by PMI and the emitted integer is engine-identical.
     *
-    * Scale: one pair-level groupBy (the cooc shuffle), a vocab-bounded
-    * marginal groupBy, a 1-row total broadcast, two vocab-bounded
-    * marginal joins onto the cell relation, top-k per-partition heaps. */
+    * Scale: one cell groupBy (`cellCounts`), a vocab-bounded marginal
+    * groupBy broadcast into two joins onto the cell relation, the total
+    * as a scalar subquery over the marginals, top-k per-partition heaps. */
   def pmiCells(docs: DataFrame, vocab: DataFrame, windowSize: Int,
       minScaled: Long, topK: Int): DataFrame = {
     val lcm = (1 to windowSize).foldLeft(1L)((a, k) =>
       a * k / BigInt(a).gcd(BigInt(k)).toLong)
-    val scaled = (1 to windowSize).map(k =>
-      sum(when(col("dd") === k, lit(lcm / k)).otherwise(0L)))
-      .reduceLeft(_ + _)
-    val cells = coocPairs(docs, vocab, windowSize)
-      .groupBy("row_id", "col_id").agg(scaled.as("sw"))
-    val marg = cells.groupBy("row_id").agg(sum(col("sw")).as("smi"))
-    val tot = cells.agg(sum(col("sw")).as("st"))
+    val scaled = (1 to windowSize).map(k => col(s"n$k") * lit(lcm / k)).reduceLeft(_ + _)
+    val cells = cellCounts(docs, vocab, windowSize)
+      .select(col("row_id"), col("col_id"), scaled.as("sw"))
+    val marg = broadcast(cells.groupBy("row_id").agg(sum(col("sw")).as("smi")))
     cells
       .join(marg, "row_id")
       .join(marg.select(col("row_id").as("col_id"), col("smi").as("smj")),
         "col_id")
-      .crossJoin(broadcast(tot))
       .filter(col("sw") >= minScaled)
+      .withColumn("st", marg.agg(sum(col("smi"))).scalar())
       .select(col("row_id"), col("col_id"), col("sw"),
         expr("CAST(sw AS DECIMAL(38,0)) * CAST(st AS DECIMAL(38,0)) * 1000000" +
           " div (CAST(smi AS DECIMAL(38,0)) * CAST(smj AS DECIMAL(38,0)))")
@@ -192,12 +234,10 @@ object SwivelPrep {
   }
 
   /** Row sums of the (symmetric) co-occurrence matrix per token id —
-    * computed from the pair relation with the same fixed-order weight
-    * expression, so marginals sum the UNROUNDED cell weights. */
+    * `rowSums` over `cellCounts`, so marginals sum the UNROUNDED cell
+    * weights. */
   def marginals(docs: DataFrame, vocab: DataFrame, windowSize: Int): DataFrame =
-    coocPairs(docs, vocab, windowSize)
-      .groupBy(col("row_id").as("id"))
-      .agg(round(weightExpr(windowSize), 4).as("marginal"))
+    rowSums(cellCounts(docs, vocab, windowSize), windowSize)
 
   /** Shard assignment: row_shard = id % numShards, local index
     * id / numShards, with numShards = vocabSize / shardSize (vocabSize is

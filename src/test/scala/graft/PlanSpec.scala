@@ -87,6 +87,22 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("Window") || p.contains("RunningWindowFunction"))
   }
 
+  test("swivel_cooc/marginals/pmi: pairs come from a row-local generator — no join over the token stream, no doc_id shuffle") {
+    import graft.ops.Swivel
+    for (q <- Seq(Swivel.swivelCooc, Swivel.swivelMarginals, Swivel.swivelPmi)) {
+      val df = q.fn(spark, d)
+      val planned = df.queryExecution.executedPlan.toString
+      df.collect()
+      // the plan as planned, then as AQE finally ran it (subqueries included)
+      for (p <- Seq(planned, df.queryExecution.executedPlan.toString)) {
+        for (j <- Seq("SortMergeJoin", "ShuffledHashJoin", "BroadcastNestedLoopJoin"))
+          assert(!p.contains(j), s"${q.name} plans a $j:\n$p")
+        assert(!p.linesIterator.exists(l => l.contains("Exchange") && l.contains("doc_id")),
+          s"${q.name} shuffles on doc_id:\n$p")
+      }
+    }
+  }
+
   test("AQE splits a skewed sort-merge join partition at runtime (skew=true)") {
     // The runtime half of the skew story: swivel_cooc_salted is the
     // DECLARED skew path (explicit salting, driver-gated); this pins the

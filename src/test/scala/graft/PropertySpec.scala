@@ -28,6 +28,57 @@ class PropertySpec extends AnyFunSuite {
   private def toDf(texts: Seq[String]) =
     texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
 
+  /** `corpusGen` plus the tokenizer's edge cases: null texts and short
+    * documents (0–4 tokens, so "" and documents shorter than the window)
+    * with leading, trailing and double spaces — empty tokens, which are
+    * in-vocab at minCount 1 — and supplementary-plane characters. */
+  private val swivelCorpusGen: Gen[Seq[String]] = for {
+    base <- corpusGen
+    edge <- Gen.listOfN(4, Gen.frequency(
+      1 -> Gen.const(null: String),
+      5 -> (for {
+        n <- Gen.choose(0, 4)
+        toks <- Gen.listOfN(n, Gen.oneOf("a", "b", "", "\uD83D\uDE00", "x\uD835\uDD38"))
+        lead <- Gen.oneOf("", " ", "  ")
+        trail <- Gen.oneOf("", " ", "  ")
+      } yield lead + toks.mkString(" ") + trail)))
+  } yield base ++ edge
+
+  /** The `doc_id` self-join formulation the window generator replaced:
+    * the reference the generator's cells and marginals must equal. */
+  private def selfJoinPairs(d: org.apache.spark.sql.DataFrame,
+      vocab: org.apache.spark.sql.DataFrame, w: Int) = {
+    val t = SwivelPrep.tokenize(d)
+      .join(broadcast(vocab.select("token", "id")), "token")
+      .select(col("doc_id"), col("pos"), col("id"))
+    val pairs = t.as("a").join(t.as("b"),
+        col("a.doc_id") === col("b.doc_id") && col("b.pos") > col("a.pos") &&
+          col("b.pos") <= col("a.pos") + w)
+      .select(col("a.id").as("x"), col("b.id").as("y"),
+        (col("b.pos") - col("a.pos")).cast("int").as("dd"))
+    pairs.select(col("x").as("row_id"), col("y").as("col_id"), col("dd"))
+      .union(pairs.select(col("y").as("row_id"), col("x").as("col_id"), col("dd")))
+  }
+
+  test("window generator: cooc and marginals equal the doc_id self-join on edge-case corpora") {
+    for ((texts, i) <- samples(swivelCorpusGen, 4).zipWithIndex; w <- Seq(1, 3)) {
+      val d = toDf(texts)
+      val vocab = SwivelPrep.buildVocab(d, minCount = 1 + i % 2, shardSize = 1)
+      val weight = round((1 to w).map(k =>
+        sum(when(col("dd") === k, 1L).otherwise(0L)) / lit(k.toDouble)).reduceLeft(_ + _), 4)
+      val ref = selfJoinPairs(d, vocab, w)
+      val wantCells = ref.groupBy("row_id", "col_id").agg(weight)
+        .as[(Long, Long, Double)].collect().sortBy(c => (c._1, c._2)).toSeq
+      val wantMarg = ref.groupBy(col("row_id").as("id")).agg(weight)
+        .as[(Long, Double)].collect().sortBy(_._1).toSeq
+      val ctx = s"w=$w corpus=${texts.map(Option(_).map(t => s"[$t]").getOrElse("null"))}"
+      assert(SwivelPrep.cooc(d, vocab, w).as[(Long, Long, Double)].collect()
+        .sortBy(c => (c._1, c._2)).toSeq == wantCells, ctx)
+      assert(SwivelPrep.marginals(d, vocab, w).as[(Long, Double)].collect()
+        .sortBy(_._1).toSeq == wantMarg, ctx)
+    }
+  }
+
   test("cooc is symmetric and marginals sum to total matrix weight") {
     for (texts <- samples(corpusGen, 4)) {
       val d = toDf(texts)

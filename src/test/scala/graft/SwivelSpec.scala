@@ -2,7 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Row
-import graft.swivel.SwivelPrep
+import graft.swivel.{SwivelMain, SwivelPrep}
+import graft.sources.Sources
+import java.nio.file.{Files, Paths}
 
 /** Hand-computed goldens for the Swivel prep pipeline (SURVEY §5.2-3). */
 class SwivelSpec extends AnyFunSuite {
@@ -83,5 +85,54 @@ class SwivelSpec extends AnyFunSuite {
         "row_shard <> global_row % 2 OR local_row <> global_row div 2 OR " +
         "col_shard <> global_col % 2 OR local_col <> global_col div 2"))
     assert(bad.count() == 0)
+  }
+
+  test("windowSize or shardSize below 1 is rejected up front") {
+    val d = docs("a b a")
+    intercept[IllegalArgumentException](SwivelPrep.buildVocab(d, minCount = 1, shardSize = 0))
+    val vocab = SwivelPrep.buildVocab(d, minCount = 1, shardSize = 1)
+    intercept[IllegalArgumentException](SwivelPrep.cellCounts(d, vocab, windowSize = 0))
+  }
+
+  test("SwivelMain.parse: defaults, and None for a missing path or a non-positive/non-numeric integer flag") {
+    val base = Array("--input", "in", "--output_dir", "out")
+    assert(SwivelMain.parse(base).contains(SwivelMain.Opts("in", "out")))
+    assert(SwivelMain.parse(base ++ Array("--window_size", "3", "--output_format", "pb"))
+      .contains(SwivelMain.Opts("in", "out", windowSize = 3, outputFormat = "pb")))
+    assert(SwivelMain.parse(Array("--input", "in")).isEmpty)
+    for ((flag, v) <- Seq("window_size" -> "0", "window_size" -> "-1", "shard_size" -> "0",
+        "min_count" -> "0", "shard_size" -> "4k", "min_count" -> "", "window_size" -> "1e3"))
+      assert(SwivelMain.parse(base ++ Array(s"--$flag", v)).isEmpty, s"--$flag $v accepted")
+  }
+
+  test("SwivelMain.run end to end (pb): sums file, cell count and shard grid match the stages") {
+    val dir = Files.createTempDirectory("graft_swivel_cli")
+    val corpus = dir.resolve("corpus.txt")
+    // 'q' stands alone on its lines: in vocab, but no in-window partner,
+    // so its sums line must be the zero backfill
+    Files.write(corpus, Seq("a b c a b", "b c d  d a", "q", "c a b d", "q", "a")
+      .mkString("", "\n", "\n").getBytes("UTF-8"))
+    val out = dir.resolve("out").toString
+    val buf = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) {
+      SwivelMain.run(spark, SwivelMain.Opts(corpus.toString, out, shardSize = 2,
+        minCount = 1, windowSize = 3, outputFormat = "pb"))
+    }
+    val d = Sources.textCorpus(spark, corpus.toString)
+    val vocab = SwivelPrep.buildVocab(d, minCount = 1, shardSize = 2)
+    val vocabSize = vocab.count().toInt
+    assert(vocabSize == 6) // a b c d q and the empty token of "d  d"
+    val marg = SwivelPrep.marginals(d, vocab, 3).as[(Long, Double)].collect().toMap
+    val q = vocab.filter($"token" === "q").select("id").as[Long].head()
+    assert(!marg.contains(q))
+    val want = (0L until vocabSize).map(i => f"${marg.getOrElse(i, 0.0)}%.4f")
+    val rowSums = Files.readAllLines(Paths.get(s"$out/row_sums.txt"))
+    assert(rowSums.toArray.toSeq == want)
+    assert(Files.readAllLines(Paths.get(s"$out/col_sums.txt")) == rowSums)
+    val printed = "cells=(\\d+)".r.findFirstMatchIn(buf.toString("UTF-8")).map(_.group(1).toLong)
+    assert(printed.contains(SwivelPrep.cooc(d, vocab, 3).count()))
+    val numShards = vocabSize / 2
+    assert(new java.io.File(s"$out/shards_pb").list().count(_.endsWith(".pb")) ==
+      numShards * numShards)
   }
 }
