@@ -1,13 +1,42 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** Root-name prefix of the current multi-split mirror layout. */
+  val MirrorPrefix = "graft_bench_mirror_v5_"
+
+  /** Mirror roots of a STALE layout among the names under /tmp — the
+    * only ones a fresh mirror build may delete. A current-layout root of
+    * another fixture, or one a concurrent process is still building, is
+    * live and kept. */
+  def staleMirrors(names: Seq[String]): Seq[String] =
+    names.filter(n => n.startsWith("graft_bench_mirror_") && !n.startsWith(MirrorPrefix))
+
+  /** SPARK_GRAFT_CPUS as a positive core count. Spark itself would take
+    * `*` (local[*]), which then prints `"cpus":*` — invalid JSON that
+    * also slips past the clobber guard below. */
+  def cpusFrom(raw: String): Either[String, Int] =
+    raw.toIntOption.filter(_ > 0)
+      .toRight(s"SPARK_GRAFT_CPUS must be a positive integer, got '$raw'")
+
+  /** Which file a full run writes, given the existing BENCH.json (None
+    * when absent): BENCH.json itself only when it is absent or records
+    * the same core count; otherwise — another count, or no `cpus` field
+    * to compare — `BENCH_c<cpus>.json`, so a scaling run never clobbers
+    * the artifact of record. */
+  def benchTarget(existing: Option[String], cpus: Int): String = existing match {
+    case Some(text) if !""""cpus":(\d+)""".r.findFirstMatchIn(text)
+        .exists(_.group(1) == cpus.toString) => s"BENCH_c$cpus.json"
+    case _ => "BENCH.json"
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = cpusFrom(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+      .fold(msg => { System.err.println(msg); sys.exit(2) }, identity)
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       // AQE coalescing floor, env-overridable; DEFAULT = Spark's 1m.
       // Round 15 measured a 128k floor both ways: dedicated probe
       // sessions showed the 1 MB default coalescing CPU-dense pair
@@ -52,18 +81,15 @@ object Bench {
         // processes, so a split-rule change must land in a FRESH root —
         // otherwise a host that ever built the old layout silently
         // benches against it forever
-        val root = s"/tmp/graft_bench_mirror_v5_$hex"
+        val root = s"/tmp/$MirrorPrefix$hex"
         val ready = Paths.get(root, "_MIRROR_READY")
         if (!Files.exists(ready)) {
-          // building a fresh layout: delete every OTHER mirror root
-          // (prior layout versions, prior fixture dirs) so orphaned
-          // full-dataset copies don't accumulate in /tmp across layout
-          // bumps (round-15 advice). Best-effort — a failure here can
+          // building a fresh layout: delete the mirror roots of stale
+          // layouts so orphaned full-dataset copies don't accumulate in
+          // /tmp across layout bumps. Best-effort — a failure here can
           // only leave the nuisance it was cleaning.
-          Option(new java.io.File("/tmp").listFiles()).toSeq.flatten
-            .filter(f => f.getName.startsWith("graft_bench_mirror_") &&
-              f.getPath != root)
-            .foreach(f => try graft.ops.Staging.deleteTree(f.getPath)
+          staleMirrors(Option(new java.io.File("/tmp").list()).toSeq.flatten)
+            .foreach(n => try graft.ops.Staging.deleteTree(s"/tmp/$n")
               catch { case _: Throwable => () })
           for (t <- Tables.all) {
             val src = Paths.get(s"$sfDir/$t.parquet")
@@ -137,11 +163,10 @@ object Bench {
       try graft.ops.TpchSqlParity.hasPersistedReport(benchDir)
       catch { case _: Throwable => false }
     // GENERALIZED cold_s (round 16, r15 verdict #1): rep-1 wall time is
-    // recorded for EVERY key whose first invocation performed session-
-    // scoped one-time work (Landed.once landings, bucketed catalog
-    // tables, vocab/index/parity memos — each bumps ColdWork when it
-    // actually computes). min-of-reps stays the plan-cost stat, but the
-    // amortized work now always appears in the artifact instead of
+    // recorded for EVERY key whose first invocation filled a SessionMemo
+    // (landings, bucketed catalog tables, vocab/index/parity memos —
+    // each fill bumps ColdWork). min-of-reps stays the plan-cost stat,
+    // but the amortized work now always appears in the artifact instead of
     // vanishing behind warm reps (the dedup_embed_lsh_recall finding).
     val coldS = scala.collection.mutable.LinkedHashMap[String, Double]()
     for (rep <- 1 to reps; (name, fn) <- keys) {
@@ -208,21 +233,12 @@ object Bench {
       // filtered A/B's partial total — the stdout line is the record
       println("BENCH.json NOT written (SPARK_GRAFT_BENCH_ONLY filter active)")
     } else try {
-      // a SCALING run (different core count than an existing artifact of
-      // record) must not clobber BENCH.json — the r15 8-core run left a
-      // byte-plausible wrong-core map committed. The existing artifact's
-      // own "cpus" field decides; a run at a new core count lands in a
-      // suffixed file instead.
-      val canonical = java.nio.file.Paths.get("BENCH.json").toAbsolutePath
-      val existingCpus =
+      // a SCALING run must not clobber BENCH.json (see benchTarget)
+      val canonical = java.nio.file.Paths.get("BENCH.json")
+      val existing =
         if (!java.nio.file.Files.exists(canonical)) None
-        else """"cpus":(\d+)""".r.findFirstMatchIn(
-          new String(java.nio.file.Files.readAllBytes(canonical), "UTF-8"))
-          .map(_.group(1))
-      val p =
-        if (existingCpus.exists(_ != cpus))
-          java.nio.file.Paths.get(s"BENCH_c$cpus.json").toAbsolutePath
-        else canonical
+        else Some(new String(java.nio.file.Files.readAllBytes(canonical), "UTF-8"))
+      val p = java.nio.file.Paths.get(benchTarget(existing, cpus)).toAbsolutePath
       java.nio.file.Files.write(p, (line + "\n").getBytes("UTF-8"))
       println(s"BENCH.json written: $p")
     } catch { case e: Throwable =>

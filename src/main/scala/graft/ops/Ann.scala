@@ -966,17 +966,12 @@ object Ann {
     * landed-relation discipline applied to ANN (a production system
     * trains an index once and amortizes it over the query stream, never
     * per query). Training is deterministic (quantized Lloyd,
-    * deterministic seeds), so sharing cannot move any hash. Dead-session
-    * entries dropped first (the coocCache hygiene). */
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), AnyRef]()
+    * deterministic seeds), so sharing cannot move any hash. */
+  private val indexMemo = new SessionMemo[AnyRef]
 
   private def cachedIndex[T <: AnyRef](s: SparkSession, d: String, tag: String)(
-      build: => T): T = {
-    indexCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    indexCache.computeIfAbsent((s, d, tag),
-      _ => { ColdWork.note(); build }).asInstanceOf[T]
-  }
+      build: => T): T =
+    indexMemo(s, d, tag)(build).asInstanceOf[T]
 
   /** The quantized-Lloyd centroids of the gated kmeans keys (c=8,
     * iters=3), trained once per (session, sfDir). The returned relation

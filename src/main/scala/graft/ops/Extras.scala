@@ -304,8 +304,7 @@ object Extras {
     * The Landed.once discipline applied to catalog tables; table names
     * are dataset-suffixed so two datasets in one session can never alias
     * each other's catalog entries. */
-  private val bucketedOnce = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), String]()
+  private val bucketedMemo = new SessionMemo[String]
 
   /** (Session, dataset)-scoped suffix for the bucketed catalog table
     * names (shared with SourcesSpec's cleanup). The SESSION identity
@@ -318,7 +317,7 @@ object Extras {
       d: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8) +
-      "_s" + Integer.toHexString(System.identityHashCode(s))
+      SessionMemo.sessionTag(s)
 
   /** The declared plan for `join_bucketed`, exposed so SourcesSpec can pin
     * the zero-Exchange-below-join shape on exactly what the driver runs.
@@ -328,14 +327,8 @@ object Extras {
   def joinBucketedPlan(s: org.apache.spark.sql.SparkSession, d: String) = {
     import graft.sources.Sources
     val sfx = bucketedTableSuffix(s, d)
-    bucketedOnce.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    bucketedOnce.computeIfAbsent((s, d), { _ =>
-      ColdWork.note() // bucketed landing = disclosed one-time work
-      // session identity in the path (the Landed.once rule): a second
-      // live session in the same JVM must not overwrite the directory
-      // the first session's catalog tables point at
-      val base = QueryDef.tmpRoot(
-        "bkt_s" + Integer.toHexString(System.identityHashCode(s)), d)
+    bucketedMemo(s, d, "bkt") {
+      val base = SessionMemo.root(s, "bkt", d)
       Sources.writeBucketed(Tables.orders(s, d)
         .select("o_orderkey", "o_orderpriority"),
         s"graft_bkt_orders_$sfx", base + "/orders", buckets = 8,
@@ -345,7 +338,7 @@ object Extras {
         s"graft_bkt_lineitem_$sfx", base + "/lineitem", buckets = 8,
         key = "l_orderkey")
       base
-    })
+    }
     // hint("merge") pins SMJ so the plan is bucket-exercising at every SF
     // (a broadcast join at sf0.001 would also be shuffle-free, but then the
     // key wouldn't prove the bucketed layout carries the join).

@@ -94,58 +94,82 @@ object Det {
       .otherwise(hi)
 }
 
-/** Honest-measurement hook for session-scoped one-time work (round-16,
-  * r15 verdict #1): every first-invocation landing — `Landed.once`,
-  * the bucketed catalog tables, the swivel vocab/cooc memos, the ANN
-  * index caches, the TPC-H parity certification — bumps this counter
-  * when it actually PERFORMS the amortized work (never on a cache hit).
-  * Bench snapshots the counter around rep 1 of each key: any key whose
-  * first invocation triggered a landing gets its rep-1 wall time
-  * recorded in the artifact's "cold_s" map, so the min-of-reps stat can
-  * never erase the one-time cost from the record (the r15 verdict's
-  * dedup_embed_lsh_recall finding — the landing made the warm rep
-  * 0.29 s and the ~2.3 s derivation appeared nowhere in the artifact).
-  * A landing is attributed to whichever key paid it, which is exactly
-  * what the wall clock says. */
+/** Honest-measurement hook for session-scoped one-time work: bumped by
+  * `SessionMemo`, once per fill, never on a hit. Bench snapshots the
+  * counter around rep 1 of each key, and any key whose first invocation
+  * filled a memo gets its rep-1 wall time recorded in the artifact's
+  * "cold_s" map, so the min-of-reps stat can never erase the one-time
+  * cost from the record. A fill is attributed to whichever key paid it,
+  * which is exactly what the wall clock says. */
 object ColdWork {
   private val n = new java.util.concurrent.atomic.AtomicLong(0L)
-  def note(): Unit = { n.incrementAndGet(); () }
+  private[ops] def note(): Unit = { n.incrementAndGet(); () }
   def count: Long = n.get
 }
 
-/** Landed-relation cache shared across operator modules: ONE parquet
-  * materialization per (session, dataset, tag), read back by every key
-  * that consumes the same derived base relation — the `sharedVocabCooc`
-  * discipline (Swivel.scala) generalized. Graph's six kernels were the
-  * first family moved onto it (round 10; the family re-derived the same
-  * fact self-join six times — 16% of the whole bench); the partsupp
-  * TPC-H batch is the second (four keys × one distinct-pair derivation).
-  * At 100 TB these derived dims are landed tables maintained beside the
-  * facts — landing-once-per-session is the local-mode honest analog.
-  * Entries owned by stopped sessions drop first; the path is
-  * tmpRoot-stable within a process so bench reps reuse the file. */
-object Landed {
+/** Session-scoped "compute once" memo: one value per (session, dataset,
+  * tag), built by the first call and returned to every later one. It is
+  * the one rule every landed relation, trained index and certification
+  * memo follows:
+  *   - entries of stopped sessions drop first, so a dead session's
+  *     checkpoint blocks and the session itself are never pinned;
+  *   - `build` runs under `computeIfAbsent`, so a key fills exactly once
+  *     (a concurrent call for it waits rather than duplicating a long
+  *     build), and a `build` that throws leaves no entry (the next call
+  *     retries);
+  *   - every fill bumps `ColdWork`, every hit does not.
+  * Each instance owns its map: a `build` may call a DIFFERENT memo (the
+  * swivel cooc fill reads the vocab memo, the TPC-H parity run reaches
+  * `Landed.once`), but never its own instance — `ConcurrentHashMap`
+  * rejects a re-entrant `computeIfAbsent` with "Recursive update". */
+final class SessionMemo[V] {
   private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), String]()
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), V]()
+
+  def apply(s: SparkSession, d: String, tag: String)(build: => V): V = {
+    cache.keySet.removeIf(k => k._1.sparkContext.isStopped)
+    cache.computeIfAbsent((s, d, tag), { _ =>
+      val v = build
+      ColdWork.note()
+      v
+    })
+  }
+}
+
+object SessionMemo {
+  /** `_s<identityHash>`: the owning session's identity in a staging path
+    * or catalog name. */
+  def sessionTag(s: SparkSession): String =
+    "_s" + Integer.toHexString(System.identityHashCode(s))
+
+  /** `QueryDef.tmpRoot` scoped to the owning session: two live sessions
+    * in one JVM get separate directories, so one session's `overwrite`
+    * never deletes files the other is scanning. */
+  def root(s: SparkSession, prefix: String, d: String): String =
+    QueryDef.tmpRoot(prefix + sessionTag(s), d)
+}
+
+/** Landed relations: ONE parquet materialization per (session, dataset,
+  * tag), read back by every key that consumes the same derived base
+  * relation (the graph family's edge relations, the partsupp TPC-H
+  * batch, the incremental-aggregation MV). At 100 TB these derived dims
+  * are landed tables maintained beside the facts; landing once per
+  * session is the local-mode analog. The path is tmpRoot-stable within a
+  * process, so bench reps reuse the file. */
+object Landed {
+  private val memo = new SessionMemo[String]
 
   /** Lands `build` once per (session, dataset, tag), returns a reader.
-    * `build` must not recurse into `once` (ConcurrentHashMap forbids
-    * re-entrant computeIfAbsent) — helpers deriving from another landed
-    * relation force their base OUTSIDE the closure. */
+    * `build` must not recurse into `once` (see `SessionMemo`): helpers
+    * deriving from another landed relation force their base OUTSIDE the
+    * closure. */
   def once(s: SparkSession, d: String, tag: String)(
       build: => DataFrame): DataFrame = {
-    cache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val path = cache.computeIfAbsent((s, d, tag), { _ =>
-      // the path embeds the OWNING SESSION (identity hash), not just
-      // pid+dataset: two live sessions in one JVM get separate cache
-      // entries, and without this one's overwrite would delete the
-      // directory the other is lazily scanning mid-read
-      ColdWork.note() // first landing = one-time work a bench rep must disclose
-      val root = QueryDef.tmpRoot(
-        "ld_" + tag + "_s" + Integer.toHexString(System.identityHashCode(s)), d)
+    val path = memo(s, d, tag) {
+      val root = SessionMemo.root(s, "ld_" + tag, d)
       build.write.mode("overwrite").parquet(root)
       root
-    })
+    }
     s.read.parquet(path)
   }
 }

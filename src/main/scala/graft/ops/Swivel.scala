@@ -84,19 +84,15 @@ object Swivel {
     * bounded collected rows is the join_bucketed/sharedVocabCooc
     * amortization, not result caching: every value is still computed
     * from the parquet inputs once per (session, dataset). */
-  private val vocabCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), Seq[(Long, String, Long)]]()
+  private val vocabMemo = new SessionMemo[Seq[(Long, String, Long)]]
 
   private def cachedVocab(docs: org.apache.spark.sql.DataFrame) = {
     val s = docs.sparkSession
     import s.implicits._
-    vocabCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
     // keyed by the scan's input files (a stable per-dataset identity the
     // caller's DataFrame already carries) — two datasets in one session
     // can never alias
-    val key = (s, docs.inputFiles.sorted.mkString(","))
-    val rows = vocabCache.computeIfAbsent(key, { _ =>
-      ColdWork.note()
+    val rows = vocabMemo(s, docs.inputFiles.sorted.mkString(","), "vocab") {
       val vocab = SwivelPrep.buildVocab(docs, MinCount, ShardSize)
       val r = vocab.select(col("id"), col("token"), col("cnt"))
         .as[(Long, String, Long)].collect().toSeq
@@ -105,7 +101,7 @@ object Swivel {
       // sweeps in one session leave no storage residue.
       org.apache.spark.sql.graft.bridge.releaseLocalCheckpoint(vocab)
       r
-    })
+    }
     rows.toDF("id", "token", "cnt")
   }
 
@@ -190,24 +186,17 @@ object Swivel {
     * cluster scale the equivalent is writing the matrix to parquet once
     * (`Sources.writeShards`) and reading it back per consumer.
     */
-  private val coocCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String),
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]()
-  /** (vocab, cooc) per (session, sfDir) — vocab rides in the same cache
+  private val coocMemo = new SessionMemo[
+    (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]
+  /** (vocab, cooc) per (session, sfDir) — vocab rides in the same memo
     * entry so a cold shard key derives the corpus-wide vocabulary ONCE,
-    * not once for the cache fill and again for its own shard call. */
-  private def sharedVocabCooc(s: org.apache.spark.sql.SparkSession, d: String) = {
-    // Drop entries owned by stopped sessions first: they pin checkpoint
-    // blocks and the dead SparkSession itself for the process lifetime
-    // otherwise (test suites / long-lived drivers that cycle sessions).
-    coocCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    coocCache.computeIfAbsent((s, d), { case (sess, dir) =>
-      ColdWork.note()
-      val docs = Tables.documents(sess, dir)
+    * not once for the memo fill and again for its own shard call. */
+  private def sharedVocabCooc(s: org.apache.spark.sql.SparkSession, d: String) =
+    coocMemo(s, d, "cooc") {
+      val docs = Tables.documents(s, d)
       val vocab = cachedVocab(docs)
       (vocab, SwivelPrep.cooc(docs, vocab, WindowSize).localCheckpoint())
-    })
-  }
+    }
 
   private val shardCte =
     s""", nsh AS (

@@ -1068,25 +1068,22 @@ object TextAnalysis {
   /** One corpus-vocabulary BPE training per (session, sfDir), shared by
     * `text_bpe_merge` (consumes the merge table) and `text_bpe_encode`
     * (consumes the trained vocabulary) — the trained-index discipline
-    * (Ann.cachedKmeansCents / Graph.landedOnce): training is
+    * (Ann.cachedKmeansCents / Landed.once): training is
     * deterministic, so sharing cannot move a hash, and the 8 driver-
     * collect rounds run once instead of once per consumer. */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Seq[(Int, String, String, Long)], DataFrame)]()
+  private val bpeMemo =
+    new SessionMemo[(Seq[(Int, String, String, Long)], DataFrame)]
 
   private def cachedBpe(s: SparkSession,
-      d: String): (Seq[(Int, String, String, Long)], DataFrame) = {
-    bpeCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    bpeCache.computeIfAbsent((s, d), { case (sess, dir) =>
-      ColdWork.note()
-      val vocab = Tables.documents(sess, dir)
+      d: String): (Seq[(Int, String, String, Long)], DataFrame) =
+    bpeMemo(s, d, "bpe") {
+      val vocab = Tables.documents(s, d)
         .select(explode(split(col("text"), " ")).as("w"))
         .filter(col("w").rlike("^[a-z]{2,}$"))
         .groupBy("w").agg(count(lit(1)).as("wc"))
       val (merges, vfinal) = bpeTrainFull(vocab, BpeRounds)
       (merges, vfinal.localCheckpoint())
-    })
-  }
+    }
 
   val textBpeMerge = QueryDef(
     "text_bpe_merge",

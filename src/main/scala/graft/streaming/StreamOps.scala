@@ -311,26 +311,17 @@ object StreamOps {
     * into the watched dir mid-run — a per-rep append would both mutate
     * the shared landing and cost one extra full-state checkpoint commit
     * per rep. */
-  private val stagedCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, String),
-    (String, org.apache.spark.sql.types.StructType)]()
+  private val stagedMemo =
+    new graft.ops.SessionMemo[(String, org.apache.spark.sql.types.StructType)]
 
   def stagedOnce(s: org.apache.spark.sql.SparkSession, d: String, tag: String)(
       build: String => org.apache.spark.sql.types.StructType)
-      : (String, org.apache.spark.sql.types.StructType) = {
-    stagedCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    stagedCache.computeIfAbsent((s, d, tag), _ => {
-      graft.ops.ColdWork.note()
-      // the path embeds the OWNING SESSION (identity hash), not just
-      // pid+dataset — the Landed.once discipline: without it a second
-      // live session in the same JVM would deleteTree and restage the
-      // directory the first session's streaming query is mid-read on
-      val inDir = graft.ops.QueryDef.tmpRoot("sland_" + tag +
-        "_s" + Integer.toHexString(System.identityHashCode(s)), d) + "/in"
+      : (String, org.apache.spark.sql.types.StructType) =
+    stagedMemo(s, d, tag) {
+      val inDir = graft.ops.SessionMemo.root(s, "sland_" + tag, d) + "/in"
       graft.ops.Staging.deleteTree(inDir)
       (inDir, build(inDir))
-    })
-  }
+    }
 
   /** Run `body` with `spark.sql.shuffle.partitions` temporarily sized
     * for a checkpointed streaming query, restoring the session conf
